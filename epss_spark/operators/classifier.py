@@ -31,7 +31,7 @@ Scale shape (the 100-TB plan):
     count, then the per-doc dense fold), run ONCE and persistable as a
     parquet artifact like the other index builds (DEPLOYMENT.md);
   * each training epoch is ONE pass over the cached features
-    collecting D+2 BIGINTs to the driver — by default an Arrow kernel
+    collecting D+2 BIGINTs to the driver — an Arrow kernel
     emitting per-batch PARTIAL integer sums, folded in exact Python
     ints (bit-identical to the codegen aggregate: quantized sums
     commute; and measured faster at every D, see linear_fit) — the
@@ -233,18 +233,11 @@ def linear_score(
     bias: float,
     x_col: str = "x",
     out_col: str = "score",
-    impl: str = "auto",
 ) -> DataFrame:
-    """Apply a trained model: adds `out_col` = p(w.x + b). `impl`:
-    "expr" forces the codegen chain, "batched" the Arrow kernel,
-    "auto" dispatches on BATCHED_SCORE_DIMS — the dual-path contract
-    (bit-identical either way, pinned in tests)."""
-    if impl not in ("auto", "expr", "batched"):
-        raise ValueError(f"impl must be auto|expr|batched, got {impl!r}")
-    use_batched = impl == "batched" or (
-        impl == "auto" and len(weights) > BATCHED_SCORE_DIMS
-    )
-    if use_batched:
+    """Apply a trained model: adds `out_col` = p(w.x + b). The codegen
+    chain at or below BATCHED_SCORE_DIMS, the Arrow kernel above — the
+    dual-path contract (bit-identical either way, pinned in tests)."""
+    if len(weights) > BATCHED_SCORE_DIMS:
         return _score_batched(df, weights, bias, x_col, out_col)
     z = _dot_chain(x_col, weights, bias)
     return df.withColumn(out_col, _sigmoid_rational(z))
@@ -258,7 +251,6 @@ def linear_fit(
     n_epochs: int = 10,
     lr: float = 1.0,
     quant: float = QUANT,
-    impl: str = "auto",
 ) -> tuple[list[float], float]:
     """Full-batch gradient descent on the rational-link logistic loss:
     returns (weights, bias), both driver-resident. Labels must be
@@ -268,32 +260,22 @@ def linear_fit(
     spelling the oracle replays. Persist `feats` before calling —
     every epoch scans it.
 
-    Dual-path, but unlike scoring the Arrow form is the DEFAULT at
-    every dim: the kernel emits one row of PARTIAL integer sums per
-    batch and the driver folds them in Python ints — bit-identical to
-    the codegen aggregate by construction (quantized-BIGINT sums
-    commute, the per-row floor((r*x_j)*quant + 0.5) is the same IEEE
-    sequence in both forms; pinned in tests) and MEASURED faster
+    The gradient always runs as the Arrow kernel (_gradient_batched;
+    _gradient_expr is its codegen reference): each batch emits one row
+    of PARTIAL integer sums and the driver folds them in Python ints —
+    bit-identical to the codegen aggregate by construction
+    (quantized-BIGINT sums commute, the per-row
+    floor((r*x_j)*quant + 0.5) is the same IEEE sequence in both forms;
+    pinned in tests) and MEASURED faster
     everywhere (tools/classifier_scale_probe.py op=epoch, 100k rows:
     3.5x at dim 64, 7.5x at 128 — the dim+2-sum expression aggregate
     is heavy even at the oracle shape, and past BATCHED_SCORE_DIMS it
-    is the crash-prone form). `impl` = auto|expr|batched; "expr" stays
-    forceable at or below BATCHED_SCORE_DIMS for the dual-path pin and
-    oracle mirroring.
+    is the crash-prone form).
 
     Raises on empty input, non-0/1 labels, and gradient sums outside
     the 2^62 guard (see module docstring for the a-priori bound)."""
     if n_epochs < 1:
         raise ValueError(f"n_epochs must be >= 1, got {n_epochs}")
-    if impl not in ("auto", "expr", "batched"):
-        raise ValueError(f"impl must be auto|expr|batched, got {impl!r}")
-    use_batched = impl != "expr"
-    if impl == "expr" and dim > BATCHED_SCORE_DIMS:
-        raise ValueError(
-            f"impl='expr' at dim {dim} would unroll a janino-hostile "
-            f"aggregate (> BATCHED_SCORE_DIMS = {BATCHED_SCORE_DIMS}); "
-            "use impl='auto'/'batched'"
-        )
     y = F.col(label_col).cast("double")
     bad = feats.filter(y.isNull() | ((y != 0.0) & (y != 1.0))).limit(1).collect()
     if bad:
@@ -304,10 +286,7 @@ def linear_fit(
     w = [0.0] * dim
     b = 0.0
     for _ in range(n_epochs):
-        if use_batched:
-            n, gb, g = _gradient_batched(feats, w, b, x_col, label_col, quant)
-        else:
-            n, gb, g = _gradient_expr(feats, w, b, x_col, y, dim, quant)
+        n, gb, g = _gradient_batched(feats, w, b, x_col, label_col, quant)
         if not n:
             raise ValueError("linear_fit: empty training input")
         for s in (gb, *g):
@@ -431,7 +410,6 @@ def score_histogram(
     id_col: str = "doc_id",
     text_col: str = "text",
     quant: float = QUANT,
-    impl: str = "auto",
 ) -> DataFrame:
     """The frozen model's score DISTRIBUTION over a corpus: one row per
     occupied score bucket — (bucket, n, avg_score), bucket =
@@ -451,7 +429,7 @@ def score_histogram(
         docs, dim=len(weights), id_col=id_col, text_col=text_col,
         feature_scale=feature_scale,
     )
-    scored = linear_score(feats, weights, bias, impl=impl)
+    scored = linear_score(feats, weights, bias)
     bucket = F.least(
         F.floor(F.col("score") * F.lit(n_buckets)), F.lit(n_buckets - 1).cast("long")
     ).cast("int")
@@ -480,7 +458,6 @@ def calibration_report(
     id_col: str = "doc_id",
     text_col: str = "text",
     quant: float = QUANT,
-    impl: str = "auto",
 ) -> DataFrame:
     """Reliability diagram for the frozen model: per score bucket,
     (bucket, n, avg_score, frac_pos) — a well-calibrated scorer has
@@ -500,7 +477,7 @@ def calibration_report(
         dim=len(weights), id_col=id_col, text_col=text_col,
         feature_scale=feature_scale, carry_cols=("__y",),
     )
-    scored = linear_score(feats, weights, bias, impl=impl)
+    scored = linear_score(feats, weights, bias)
     bucket = F.least(
         F.floor(F.col("score") * F.lit(n_buckets)), F.lit(n_buckets - 1).cast("long")
     ).cast("int")

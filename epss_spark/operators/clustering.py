@@ -75,9 +75,15 @@ QUANT = 1_000_000.0
 # and the zero-Python plan fuses with JVM-only pipelines and avoids the
 # Arrow round-trip of every passthrough column; every larger model
 # routes through Arrow, where the kernel wins by 3-26x and stays
-# near-flat in k. Callers can force either form with impl=. Same
-# dual-path design as pq_topk / pq_topk_batched (operators/similarity.py).
+# near-flat in k. Same dual-path design as pq_topk / pq_topk_batched
+# (operators/similarity.py).
 BATCHED_ASSIGN_CELLS = 512
+
+
+def _batched(*models: Sequence[Sequence[float]]) -> bool:
+    """The dispatch rule of every assignment-shaped dual path: the Arrow
+    kernel once any model exceeds BATCHED_ASSIGN_CELLS centroid cells."""
+    return any(len(m) * len(m[0]) > BATCHED_ASSIGN_CELLS for m in models if m)
 
 
 def _replace_or_append(schema: StructType, new_fields: Sequence[StructField]) -> StructType:
@@ -188,7 +194,6 @@ def assign_clusters(
     vec_col: str = "embedding",
     cluster_col: str = "cluster_id",
     d2_col: str | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """Nearest-centroid assignment. Two physical forms, one contract:
 
@@ -198,19 +203,13 @@ def assign_clusters(
     - "batched" (large k): the Arrow-batched numpy kernel — plan size
       independent of k*dim; map-only, zero shuffle.
 
-    "auto" picks codegen at or below BATCHED_ASSIGN_CELLS centroid cells
-    and batched above it. The two forms are pinned bit-identical
+    Codegen runs at or below BATCHED_ASSIGN_CELLS centroid cells,
+    batched above it. The two forms are pinned bit-identical
     (assignments AND distances), so the switch is invisible to every
     caller — kmeans_fit / stats / sampler / outliers all inherit the
     scale path."""
-    if impl == "auto":
-        k = len(centroids)
-        dim = len(centroids[0]) if k else 0
-        impl = "batched" if k * dim > BATCHED_ASSIGN_CELLS else "codegen"
-    if impl == "batched":
+    if _batched(centroids):
         return _assign_batched(vectors, centroids, vec_col, cluster_col, d2_col)
-    if impl != "codegen":
-        raise ValueError(f"unknown assignment impl: {impl!r}")
     out = vectors.withColumn("__best", _best_centroid(vec_col, centroids))
     out = out.withColumn(cluster_col, F.col("__best")["i"])
     if d2_col is not None:
@@ -313,7 +312,6 @@ def kmeans_fit(
     vec_col: str = "embedding",
     quant: float = QUANT,
     weight_col: str | None = None,
-    assign_impl: str = "auto",
     sample_frac: float | None = None,
     id_col: str = "vec_id",
     sample_salt: str = "kmeans",
@@ -336,10 +334,10 @@ def kmeans_fit(
     or <1 weight raises (it would silently drop rows from n and the sums
     or drive a cluster count non-positive).
 
-    `assign_impl` routes the per-iteration assignment: "auto" (default)
-    uses the codegen projection up to BATCHED_ASSIGN_CELLS centroid
-    cells and the bit-identical Arrow kernel above — so a production-k
-    fit (thousands of cells) never builds the O(k*dim) expression tree.
+    The per-iteration assignment is assign_clusters' dual path: the
+    codegen projection up to BATCHED_ASSIGN_CELLS centroid cells and the
+    bit-identical Arrow kernel above — so a production-k fit (thousands
+    of cells) never builds the O(k*dim) expression tree.
 
     `sample_frac` trains on the deterministic md5-coin sample
     (sample_vectors, keyed on `id_col` with `sample_salt`) instead of
@@ -374,7 +372,7 @@ def kmeans_fit(
         bad = F.when(F.col(weight_col).isNull() | (w < 1), 1).otherwise(0)
         aggs.append(F.max(bad).alias("__badw"))
     for _ in range(n_iter):
-        assigned = assign_clusters(vectors, cents, vec_col=vec_col, impl=assign_impl)
+        assigned = assign_clusters(vectors, cents, vec_col=vec_col)
         rows = assigned.groupBy("cluster_id").agg(*aggs).collect()
         if weight_col and any(r["__badw"] for r in rows):
             raise ValueError(
@@ -536,7 +534,6 @@ def two_nearest_distances(
     cluster_col: str = "cluster_id",
     a_col: str = "d2_nearest",
     b_col: str = "d2_second",
-    impl: str = "auto",
 ) -> DataFrame:
     """Per-row (nearest cluster, own-centroid d2, second-nearest d2) —
     the projection cluster_silhouette aggregates, exposed because the
@@ -550,14 +547,8 @@ def two_nearest_distances(
     k >= 2; map-only either way (zero shuffle, zero state)."""
     if len(centroids) < 2:
         raise ValueError("two_nearest_distances needs at least 2 centroids")
-    if impl == "auto":
-        k = len(centroids)
-        dim = len(centroids[0]) if k else 0
-        impl = "batched" if k * dim > BATCHED_ASSIGN_CELLS else "codegen"
-    if impl == "batched":
+    if _batched(centroids):
         return _two_nearest_batched(vectors, centroids, vec_col, cluster_col, a_col, b_col)
-    if impl != "codegen":
-        raise ValueError(f"unknown assignment impl: {impl!r}")
     # one SQL-text expression (similarity._d2_sql rationale): identical
     # struct/array_sort tree, O(1) py4j round-trips at plan build
     from epss_spark.operators.similarity import _d2_sql, _qcol
@@ -587,7 +578,6 @@ def cluster_silhouette(
     centroids: Sequence[Sequence[float]],
     vec_col: str = "embedding",
     quant: float = QUANT,
-    impl: str = "auto",
 ) -> DataFrame:
     """Simplified (centroid-based) silhouette — the internal clustering
     quality metric that, unlike inertia, is comparable ACROSS k: per
@@ -609,11 +599,10 @@ def cluster_silhouette(
     Scale shape: one two-nearest projection (two_nearest_distances —
     dual-path, so production-k models ride the near-flat Arrow kernel
     instead of the O(k*dim) interpreted expression tree) + ONE
-    map-side-combinable k-row aggregate. `impl` forces a physical form,
-    "auto" dispatches at BATCHED_ASSIGN_CELLS like assign_clusters."""
+    map-side-combinable k-row aggregate."""
     rows = two_nearest_distances(
         vectors.select(vec_col), centroids, vec_col=vec_col,
-        cluster_col="cluster_id", a_col="__a", b_col="__b", impl=impl,
+        cluster_col="cluster_id", a_col="__a", b_col="__b",
     )
     a, b = F.col("__a"), F.col("__b")
     s = F.when(F.greatest(a, b) == 0.0, F.lit(0.0)).otherwise(
@@ -641,7 +630,6 @@ def cluster_boundary(
     threshold: float = 0.05,
     vec_col: str = "embedding",
     quant: float = QUANT,
-    impl: str = "auto",
 ) -> DataFrame:
     """Per-cluster boundary-mass report — the churn-risk companion to
     cluster_silhouette: a point whose second-nearest centroid is almost
@@ -666,7 +654,7 @@ def cluster_boundary(
     k-row aggregate (same exchange profile as cluster_silhouette)."""
     rows = two_nearest_distances(
         vectors.select(vec_col), centroids, vec_col=vec_col,
-        cluster_col="cluster_id", a_col="__a", b_col="__b", impl=impl,
+        cluster_col="cluster_id", a_col="__a", b_col="__b",
     )
     margin = F.col("__b") - F.col("__a")
     qm = F.floor(margin * F.lit(quant) + F.lit(0.5)).cast("long")
@@ -864,7 +852,6 @@ def farthest_first_init(
     start_id: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
     sample_frac: float | None = None,
     sample_salt: str = "ffinit",
 ) -> list[list[float]]:
@@ -908,7 +895,7 @@ def farthest_first_init(
     for _ in range(k - 1):
         scored = assign_clusters(
             vectors.select(id_col, vec_col), cents, vec_col=vec_col,
-            cluster_col="__c", d2_col="__d", impl=impl,
+            cluster_col="__c", d2_col="__d",
         )
         pick = (
             scored.select(id_col, vec_col, "__d")
@@ -932,7 +919,6 @@ def kmeans_parallel_init(
     vec_col: str = "embedding",
     quant: float = QUANT,
     salt: str = "kmpp",
-    impl: str = "auto",
 ) -> list[list[float]]:
     """k-means|| oversampled seeding (Bahmani et al. 2012,
     arXiv:1203.6402) — the production-scale alternative to
@@ -993,7 +979,7 @@ def kmeans_parallel_init(
     for r in range(1, n_rounds + 1):
         scored = assign_clusters(
             vectors.select(id_col, vec_col), cand, vec_col=vec_col,
-            cluster_col="__c", d2_col="__d", impl=impl,
+            cluster_col="__c", d2_col="__d",
         )
         qd2 = F.floor(F.col("__d") * F.lit(quant) + F.lit(0.5)).cast("long")
         scored = scored.select(id_col, vec_col, qd2.alias("__qd2"))
@@ -1039,7 +1025,7 @@ def kmeans_parallel_init(
     # weight candidates by their corpus cell mass, drop empty cells
     # (duplicate candidates lose the tie to the lowest index)
     counts = (
-        assign_clusters(vectors.select(vec_col), cand, vec_col=vec_col, impl=impl)
+        assign_clusters(vectors.select(vec_col), cand, vec_col=vec_col)
         .groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("__w"))
         .collect()
@@ -1069,7 +1055,6 @@ def kmeans_parallel_init(
         vec_col=vec_col,
         quant=quant,
         weight_col="__w",
-        assign_impl=impl,
     )
 
 
@@ -1169,7 +1154,6 @@ def assignment_drift(
     centroids_before: Sequence[Sequence[float]],
     centroids_after: Sequence[Sequence[float]],
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> DataFrame:
     """Model-promotion safety check: the contingency table of cell moves
     between two centroid models — (cluster_before, cluster_after, n).
@@ -1187,19 +1171,11 @@ def assignment_drift(
     small k and the combined Arrow kernel above BATCHED_ASSIGN_CELLS
     (so promote gates over production-k models never build the
     O(k*dim) interpreted expression tree)."""
-    if impl == "auto":
-        cells = max(
-            len(centroids_before) * (len(centroids_before[0]) if centroids_before else 0),
-            len(centroids_after) * (len(centroids_after[0]) if centroids_after else 0),
-        )
-        impl = "batched" if cells > BATCHED_ASSIGN_CELLS else "codegen"
-    if impl == "batched":
+    if _batched(centroids_before, centroids_after):
         pairs = _drift_batched(vectors, centroids_before, centroids_after, vec_col)
         return pairs.groupBy("cluster_before", "cluster_after").agg(
             F.count(F.lit(1)).alias("n")
         )
-    if impl != "codegen":
-        raise ValueError(f"unknown assignment impl: {impl!r}")
     before = _best_centroid(vec_col, centroids_before)["i"]
     after = _best_centroid(vec_col, centroids_after)["i"]
     return (

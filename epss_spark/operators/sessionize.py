@@ -116,8 +116,11 @@ def _funnel_chunk_tables(
     # 0, which matches no step — exactly what the string compare did).
     # The chunk buffer element narrows from (timestamp, long, string)
     # to (timestamp, long, int) and the per-entry match becomes an
-    # integer equality instead of element_at + string compare.
+    # integer equality instead of element_at + string compare. A
+    # repeated step type codes to its FIRST position, so each step's
+    # expected code comes from the per-position list `coded_steps`.
     code = F.array_position(steps_lit, F.col(type_col)).cast("int")
+    coded_steps = F.array(*[F.lit(steps.index(s) + 1) for s in steps])
     # hash(key) partitioning from the caller's window satisfies (key,
     # chunk) clustering — no second exchange for this groupBy or the
     # per-key one
@@ -150,7 +153,9 @@ def _funnel_chunk_tables(
         xus = F.unix_micros(x[time])
 
         def upd(e):
-            match = (e["step"] < n) & (x["__sc"].cast("long") == e["step"] + 1)
+            match = (e["step"] < n) & (
+                x["__sc"] == F.get(coded_steps, e["step"].cast("int"))
+            )
             first = (~e["started"]) & match
             adv = e["started"] & match
             if gap_us is not None:
@@ -286,6 +291,45 @@ def funnel_fold_states(
     )
 
 
+def _funnel_states_monolithic(
+    ev: DataFrame,
+    steps: list[str],
+    key: str,
+    type_col: str,
+    time: str,
+    tiebreak: str,
+    max_gap_seconds: int | None,
+) -> DataFrame:
+    """Reference semantics for `funnel_fold_states`: (key, step) from ONE
+    (time, tiebreak)-sorted event array per key, folded in a single walk
+    that compares event-type strings. Unbounded per-key arrays, so it is
+    the equivalence pin's reference, never a production path."""
+    per_key = ev.groupBy(key).agg(
+        F.array_sort(
+            F.collect_list(F.struct(F.col(time), F.col(tiebreak), F.col(type_col)))
+        ).alias("__seq")
+    )
+    steps_lit = F.array(*[F.lit(s) for s in steps])
+
+    def advance(acc, x):
+        # state carries (step, micros of the previous step's event) so the
+        # gap check stays exact integer arithmetic (the sessionize rule)
+        xus = F.unix_micros(x[time])
+        ok = (acc["step"] < len(steps)) & (
+            x[type_col] == F.get(steps_lit, acc["step"].cast("int"))
+        )
+        if max_gap_seconds is not None:
+            gap_us = F.lit(int(max_gap_seconds) * 1_000_000)
+            ok = ok & ((acc["step"] == 0) | (xus - acc["us"] <= gap_us))
+        return F.when(
+            ok, F.struct((acc["step"] + 1).alias("step"), xus.alias("us"))
+        ).otherwise(acc)
+
+    init = F.struct(F.lit(0).cast("long").alias("step"), F.lit(0).cast("long").alias("us"))
+    reached = F.aggregate("__seq", init, advance, lambda acc: acc["step"])
+    return per_key.select(F.col(key), reached.alias("step"))
+
+
 def event_funnel(
     events: DataFrame,
     steps: list[str],
@@ -294,7 +338,7 @@ def event_funnel(
     time: str = "ts",
     tiebreak: str = "event_id",
     max_gap_seconds: int | None = None,
-    chunk_size: int | None = 65536,
+    chunk_size: int = 65536,
 ) -> DataFrame:
     """Ordered-sequence conversion funnel: for the step sequence
     [s1, s2, ...], a key converts through step i when an event of type
@@ -316,66 +360,24 @@ def event_funnel(
     and the SQL replay is still a per-step min over gap-filtered keys.
 
     Scale shape: events are FILTERED to the step types before any
-    shuffle (pushed to the scan). Default path (`chunk_size` set) is
-    the hot-key-safe chunked prefix-fold (`funnel_fold_states`): no
-    task ever materializes more than chunk_size events of one key —
-    a bot key holding 10% of all events costs ceil(events/chunk_size)
-    bounded chunk folds, not one giant array in one task. One hash
-    exchange on the key (window + both groupBys share it). The
-    monolithic single-array fold (`chunk_size=None`) is kept as the
-    reference semantics; equality of the two paths is pinned in tests.
+    shuffle (pushed to the scan). The fold is the hot-key-safe chunked
+    prefix-fold (`funnel_fold_states`): no task ever materializes more
+    than chunk_size events of one key — a bot key holding 10% of all
+    events costs ceil(events/chunk_size) bounded chunk folds, not one
+    giant array in one task. One hash exchange on the key (window +
+    both groupBys share it). Its equality with the monolithic
+    single-array fold (`_funnel_states_monolithic`, the reference
+    semantics) is pinned in tests.
     The per-step histogram is a bounded eager fetch (<= n_steps+1
     rows, the quality_funnel precedent); the result is a literal
     DataFrame."""
     if not steps:
         raise ValueError("steps must be non-empty")
     ev = events.filter(F.col(type_col).isin(list(steps)))
-    if chunk_size is not None:
-        reached_df = funnel_fold_states(
-            ev, steps, key, type_col, time, tiebreak, max_gap_seconds,
-            chunk_size=chunk_size,
-        ).select(F.col("step").alias("__r"))
-    else:
-        per_key = ev.groupBy(key).agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(time), F.col(tiebreak), F.col(type_col)))
-            ).alias("__seq")
-        )
-        steps_lit = F.array(*[F.lit(s) for s in steps])
-        if max_gap_seconds is None:
-            reached = F.aggregate(
-                "__seq",
-                F.lit(0),
-                lambda acc, x: F.when(
-                    (acc < len(steps)) & (x[type_col] == F.element_at(steps_lit, acc + 1)),
-                    acc + 1,
-                ).otherwise(acc),
-            )
-        else:
-            # state carries (step, micros of the previous step's event) so the
-            # gap check stays exact integer arithmetic (the sessionize rule)
-            gap_us = F.lit(int(max_gap_seconds) * 1_000_000)
-            init = F.struct(
-                F.lit(0).alias("step"), F.lit(0).cast("long").alias("us")
-            )
-            reached = F.aggregate(
-                "__seq",
-                init,
-                lambda acc, x: F.when(
-                    (acc["step"] < len(steps))
-                    & (x[type_col] == F.element_at(steps_lit, acc["step"] + 1))
-                    & (
-                        (acc["step"] == 0)
-                        | (F.unix_micros(x[time]) - acc["us"] <= gap_us)
-                    ),
-                    F.struct(
-                        (acc["step"] + 1).alias("step"),
-                        F.unix_micros(x[time]).alias("us"),
-                    ),
-                ).otherwise(acc),
-                lambda acc: acc["step"],
-            )
-        reached_df = per_key.select(reached.alias("__r"))
+    reached_df = funnel_fold_states(
+        ev, steps, key, type_col, time, tiebreak, max_gap_seconds,
+        chunk_size=chunk_size,
+    ).select(F.col("step").alias("__r"))
     # Optimization r14 (guide §2.6): the step-histogram fold and the
     # distinct-key base count are independent eager jobs over different
     # row sets — submit both from a 2-thread pool so the base count's
@@ -608,8 +610,15 @@ def _type_vocab(events: DataFrame, type_col: str) -> list:
     single-column distinct (map-side partials collapse each scan task
     to its few distinct types), sorted. The bounded eager-literal
     lifecycle of the BM25 corpus stats: the model freezes the input at
-    plan-build time."""
-    rows = events.select(F.col(type_col).alias("__ty")).distinct().collect()
+    plan-build time. The fetch is capped one past the code budget (+1
+    for a NULL type), so an overflowing vocabulary costs at most 513
+    driver rows and routes the caller to the struct form."""
+    rows = (
+        events.select(F.col(type_col).alias("__ty"))
+        .distinct()
+        .limit(_TYPE_VOCAB_MAX_CODES + 2)
+        .collect()
+    )
     return sorted(r["__ty"] for r in rows if r["__ty"] is not None)
 
 

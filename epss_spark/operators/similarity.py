@@ -701,7 +701,6 @@ def semantic_decontam_hits(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     eval_id_col: str | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """SEMANTIC (embedding-space) benchmark-contamination detection —
     the fourth rung of the decontamination ladder: `contamination_bloom`
@@ -732,11 +731,11 @@ def semantic_decontam_hits(
     eval_id_col = eval_id_col or id_col
     c_asg = assign_clusters(
         corpus_vecs.select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("__cv")),
-        centroids, vec_col="__cv", cluster_col="__cell", impl=impl,
+        centroids, vec_col="__cv", cluster_col="__cell",
     )
     e_asg = assign_clusters(
         eval_vecs.select(F.col(eval_id_col).alias("eval_id"), F.col(vec_col).alias("__ev")),
-        centroids, vec_col="__ev", cluster_col="__cell", impl=impl,
+        centroids, vec_col="__ev", cluster_col="__cell",
     )
     c_asg = c_asg.withColumn("__cn", _norm(F.col("__cv")))
     e_asg = e_asg.withColumn("__en", _norm(F.col("__ev")))
@@ -761,7 +760,6 @@ def decontaminate_semantic(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     eval_id_col: str | None = None,
-    impl: str = "auto",
 ) -> DataFrame:
     """Drop every corpus vector that is a semantic near-duplicate
     (cosine >= threshold, centroid-confined — see semantic_decontam_hits)
@@ -772,7 +770,7 @@ def decontaminate_semantic(
     hits = (
         semantic_decontam_hits(
             corpus_vecs, eval_vecs, centroids, threshold, id_col, vec_col,
-            eval_id_col, impl,
+            eval_id_col,
         )
         .select(F.col("corpus_id").alias(id_col))
         .distinct()
@@ -785,7 +783,6 @@ def semantic_index(
     centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> DataFrame:
     """Build the persistent index for INCREMENTAL semantic dedup: one
     (cell, id, vector) row per corpus vector, the coarse assignment
@@ -802,7 +799,7 @@ def semantic_index(
 
     return assign_clusters(
         vectors.select(F.col(id_col), F.col(vec_col)),
-        centroids, vec_col=vec_col, cluster_col="cell", impl=impl,
+        centroids, vec_col=vec_col, cluster_col="cell",
     ).select("cell", id_col, vec_col)
 
 
@@ -813,7 +810,6 @@ def semantic_lookup(
     threshold: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> DataFrame:
     """Incremental semantic near-dup detection: cosine >= threshold
     pairs TOUCHING the new batch — new~indexed and new~new, never
@@ -836,7 +832,7 @@ def semantic_lookup(
 
     new_asg = assign_clusters(
         new_vecs.select(F.col(id_col), F.col(vec_col)),
-        centroids, vec_col=vec_col, cluster_col="cell", impl=impl,
+        centroids, vec_col=vec_col, cluster_col="cell",
     )
     new_ids = new_asg.select(F.col(id_col).alias("__nid"))
     idx_clean = index.join(
@@ -874,7 +870,6 @@ def dedup_batch_semantic(
     threshold: float = 0.99,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    impl: str = "auto",
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental semantic dedup exercised the way a nightly job runs
     it — the embedding-space analog of `dedup.dedup_batch_lines`: a
@@ -893,11 +888,11 @@ def dedup_batch_semantic(
     rule is deliberately stronger than greedy (an indexed near-dup
     always wins, like the line/span indexes' content-first rule)."""
     pairs = semantic_lookup(
-        new_vecs, index, centroids, threshold, id_col, vec_col, impl
+        new_vecs, index, centroids, threshold, id_col, vec_col
     )
     drops = pairs.select(F.col("b_id").alias(id_col)).distinct()
     kept = new_vecs.join(drops, id_col, "left_anti")
-    return kept, semantic_index(kept, centroids, id_col, vec_col, impl)
+    return kept, semantic_index(kept, centroids, id_col, vec_col)
 
 
 def _sub_d2(vec_slice_sql: str, cent: list[float]) -> Column:

@@ -803,7 +803,6 @@ def process_semantic_batch(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     compact_every: int | None = 64,
-    impl: str = "auto",
 ) -> None:
     """One idempotent epoch of the SEMANTIC dedup stream
     (operators/similarity.py::dedup_batch_semantic — the embedding-space
@@ -827,7 +826,7 @@ def process_semantic_batch(
         empty_schema=f"cell int, {id_col} long, {vec_col} array<float>",
     )
     kept, new_rows = similarity.dedup_batch_semantic(
-        batch_df, idx, centroids, threshold, id_col, vec_col, impl
+        batch_df, idx, centroids, threshold, id_col, vec_col
     )
     _write_epoch(kept, accepted_dir, epoch_id)
     _write_epoch(new_rows, index_path, epoch_id)
@@ -846,7 +845,6 @@ def start_incremental_semantic_dedup(
     vec_col: str = "embedding",
     compact_every: int | None = 64,
     available_now: bool = True,
-    impl: str = "auto",
 ):
     """The embedding-space sibling of `start_incremental_dedup` /
     `start_incremental_line_dedup`: per micro-batch, drop every vector
@@ -866,7 +864,6 @@ def start_incremental_semantic_dedup(
         process_semantic_batch(
             batch_df, epoch_id, index_path, accepted_dir, centroids,
             threshold, id_col, vec_col, compact_every=compact_every,
-            impl=impl,
         )
 
     writer = vec_stream.writeStream.foreachBatch(process_batch).option(

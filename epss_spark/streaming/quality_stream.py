@@ -64,7 +64,6 @@ def quality_delta(
     threshold: float,
     vec_col: str = "embedding",
     quant: float = clustering.QUANT,
-    impl: str = "auto",
 ) -> DataFrame:
     """This batch's per-cluster quality sums against the frozen model:
     (cluster_id, n, __qs quantized silhouette sum, __bd boundary count,
@@ -74,7 +73,7 @@ def quality_delta(
     aggregate."""
     rows = clustering.two_nearest_distances(
         batch_df.select(vec_col), centroids, vec_col=vec_col,
-        cluster_col="cluster_id", a_col="__a", b_col="__b", impl=impl,
+        cluster_col="cluster_id", a_col="__a", b_col="__b",
     )
     a, b = F.col("__a"), F.col("__b")
     s = F.when(F.greatest(a, b) == 0.0, F.lit(0.0)).otherwise(
@@ -104,7 +103,6 @@ def process_quality_batch(
     quant: float = clustering.QUANT,
     compact_every: int | None = 64,
     id_col: str | None = "vec_id",
-    impl: str = "auto",
 ) -> None:
     """One idempotent epoch: the batch's per-cluster quality delta,
     appended epoch-scoped, plus the `.ids` audit row. A foreachBatch
@@ -113,7 +111,7 @@ def process_quality_batch(
     if batch_df.isEmpty():
         return
     delta = quality_delta(
-        batch_df, centroids, threshold, vec_col=vec_col, quant=quant, impl=impl
+        batch_df, centroids, threshold, vec_col=vec_col, quant=quant
     ).withColumn("__epoch", F.lit(int(epoch_id)))
     _write_epoch(delta, state_path, epoch_id)
     autocompact_epoch(

@@ -62,7 +62,6 @@ def score_delta(
     id_col: str = "doc_id",
     text_col: str = "text",
     quant: float = classifier.QUANT,
-    impl: str = "auto",
 ) -> DataFrame:
     """This batch's per-bucket score sums against the frozen model:
     (bucket, n, __qs quantized score sum). The EXACT same bucket and
@@ -72,7 +71,7 @@ def score_delta(
         batch_df.select(id_col, text_col), dim=len(weights), id_col=id_col,
         text_col=text_col, feature_scale=feature_scale,
     )
-    scored = classifier.linear_score(feats, weights, bias, impl=impl)
+    scored = classifier.linear_score(feats, weights, bias)
     bucket = F.least(
         F.floor(F.col("score") * F.lit(n_buckets)), F.lit(n_buckets - 1).cast("long")
     ).cast("int")
@@ -97,7 +96,6 @@ def process_score_batch(
     quant: float = classifier.QUANT,
     compact_every: int | None = 64,
     audit_id_col: str | None = "doc_id",
-    impl: str = "auto",
 ) -> None:
     """One idempotent epoch: the batch's per-bucket score delta,
     appended epoch-scoped, plus the `.ids` audit row. A foreachBatch
@@ -107,7 +105,7 @@ def process_score_batch(
         return
     delta = score_delta(
         batch_df, weights, bias, feature_scale, n_buckets,
-        id_col=id_col, text_col=text_col, quant=quant, impl=impl,
+        id_col=id_col, text_col=text_col, quant=quant,
     ).withColumn("__epoch", F.lit(int(epoch_id)))
     _write_epoch(delta, state_path, epoch_id)
     autocompact_epoch(

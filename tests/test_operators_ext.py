@@ -2407,15 +2407,20 @@ def test_event_funnel_max_gap(spark):
     assert gapped == {1: 2, 2: 1}  # user 2's first view misses the window
 
 
-@pytest.mark.slow  # full-gate tier (r15: default tier must fit the driver window)
 def test_event_funnel_chunked_equals_monolithic(spark):
     """The hot-key-safe chunked prefix-fold (transition-table
-    composition) is pinned bit-identical to the monolithic per-key
+    composition) is pinned equal, per key, to the monolithic per-key
     array fold — including a bot key holding ~40% of all events, gap
-    windows that straddle chunk boundaries, and chunk sizes down to 2
-    (every boundary case exercised)."""
+    windows that straddle chunk boundaries, chunk sizes down to 2
+    (every boundary case exercised), and step lists that REPEAT an
+    event type (the coded fold must match each position, not the
+    type's first position). event_funnel's report is the reference
+    states' per-step histogram."""
     import datetime as dt
+    import functools
     import random
+
+    from pyspark.sql import DataFrame
 
     from epss_spark.operators import sessionize as sz
 
@@ -2423,24 +2428,44 @@ def test_event_funnel_chunked_equals_monolithic(spark):
     D = dt.datetime(2024, 3, 1)
     types = ["signup", "view", "purchase", "click", "refund"]
     rows = []
-    for i in range(360):
+    for i in range(100):
         u = rng.randint(1, 12)
         rows.append((u, D + dt.timedelta(seconds=rng.randint(0, 400_000)),
                      i, rng.choice(types)))
-    for i in range(360, 600):  # the bot key
+    for i in range(100, 170):  # the bot key
         rows.append((77, D + dt.timedelta(seconds=rng.randint(0, 400_000)),
                      i, rng.choice(types)))
     df = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_id long, event_type string"
     )
-    steps = ["signup", "view", "purchase"]
-    for gap in (None, 3600, 40_000):
-        mono = sorted(map(tuple, sz.event_funnel(
-            df, steps, max_gap_seconds=gap, chunk_size=None).collect()))
-        for cs in (2, 5, 64, 10_000):
-            chunked = sorted(map(tuple, sz.event_funnel(
-                df, steps, max_gap_seconds=gap, chunk_size=cs).collect()))
-            assert chunked == mono, (gap, cs)
+    args = ("user_id", "event_type", "ts", "event_id")
+    for steps in (
+        ["signup", "view", "purchase"], ["click", "click"], ["view", "click", "view"]
+    ):
+        ev = df.filter(F.col("event_type").isin(steps))
+        # every (gap, chunk size) fold in ONE job; chunk size 0 is the reference
+        folds = {
+            (gap, cs): sz._funnel_states_monolithic(ev, steps, *args, gap)
+            if cs == 0 else sz.funnel_fold_states(ev, steps, *args, gap, chunk_size=cs)
+            for gap in (None, 20_000)
+            for cs in (0, 2, 5, 10_000)
+        }
+        keys = list(folds)
+        tagged = [f.select(F.lit(i).alias("k"), "user_id", "step")
+                  for i, f in enumerate(folds.values())]
+        states: dict = {k: {} for k in keys}
+        for r in functools.reduce(DataFrame.unionByName, tagged).collect():
+            states[keys[r.k]][r.user_id] = r.step
+        for gap in (None, 20_000):
+            mono = states[(gap, 0)]
+            if gap is None:
+                assert max(mono.values()) == len(steps), steps  # full depth exercised
+            for cs in (2, 5, 10_000):
+                assert states[(gap, cs)] == mono, (steps, gap, cs)
+            report = sz.event_funnel(df, steps, max_gap_seconds=gap, chunk_size=2)
+            want = {i: sum(1 for r in mono.values() if r >= i)
+                    for i in range(1, len(steps) + 1)}
+            assert {r.step: r.n_converted for r in report.collect()} == want, (steps, gap)
 
 
 def test_funnel_fold_states_resumes_from_prior(spark):
@@ -3136,6 +3161,47 @@ def test_session_paths_capped_default_equals_exact_mode(spark):
     assert capped == exact and len(capped) > 0
 
 
+def test_session_paths_vocab_overflow_matches_python_reference(spark):
+    """More distinct event types than the 511-code dictionary holds: the
+    vocabulary fetch stops one past the code budget (bounded driver
+    state) and session_paths falls back to the struct form, whose
+    output equals a pure-Python sessionize + path count — NULL types
+    included (array_join skips them, path_len counts them)."""
+    import datetime as dt
+    from collections import Counter
+
+    from epss_spark.operators import sessionize as sz
+
+    rows, eid = [], 0
+    for u in range(60):
+        for s in range(3):  # sessions one day apart, 1..7 events 10 min apart
+            base = dt.datetime(2024, 1, 1 + s)
+            for i in range(1 + (u * 3 + s) % 7):
+                eid += 1
+                ty = None if eid == 17 else f"t{(eid * 7) % 540}"
+                rows.append((eid, u, base + dt.timedelta(minutes=10 * i), ty))
+    ev = spark.createDataFrame(
+        rows, "event_id long, user_id long, ts timestamp, event_type string"
+    )
+    assert len({r[3] for r in rows if r[3] is not None}) > sz._TYPE_VOCAB_MAX_CODES
+    vocab = sz._type_vocab(ev, "event_type")
+    assert sz._TYPE_VOCAB_MAX_CODES < len(vocab) <= sz._TYPE_VOCAB_MAX_CODES + 2
+
+    sessions: dict = {}  # user -> list of sessions, each a list of (ts, type)
+    for _, u, ts, ty in sorted(rows, key=lambda r: (r[1], r[2], r[0])):
+        cur = sessions.setdefault(u, [])
+        if not cur or (ts - cur[-1][-1][0]).total_seconds() > 1800:
+            cur.append([])
+        cur[-1].append((ts, ty))
+    want = Counter(
+        (">".join(t for _, t in sess if t is not None), len(sess))
+        for per_user in sessions.values()
+        for sess in per_user
+    )
+    got = {(r.path, r.path_len): r.n_sessions for r in sz.session_paths(ev).collect()}
+    assert got == dict(want)
+
+
 def test_path_ngrams_hand_computed(spark):
     """Journey n-grams never cross a session boundary (unlike the raw
     lead() adjacency), count every in-session occurrence, and report
@@ -3615,44 +3681,52 @@ def test_assignment_drift_contingency(spark):
     assert got == {(0, 0): 1, (0, 1): 1, (1, 1): 1}
 
 
-def test_assign_clusters_batched_bit_identical_to_codegen(spark):
+def _assign_form(monkeypatch, form):
+    """Route every assignment-shaped dual path in operators/clustering.py
+    to one physical form: the dispatch threshold moves below ("batched")
+    or above ("codegen") every model size."""
+    from epss_spark.operators import clustering
+
+    cells = -1 if form == "batched" else float("inf")
+    monkeypatch.setattr(clustering, "BATCHED_ASSIGN_CELLS", cells)
+
+
+def test_assign_clusters_batched_bit_identical_to_codegen(spark, monkeypatch):
     """The large-k Arrow kernel vs the codegen projection, on the real
     sf0.001 embeddings with a trained model: assignments AND d2 must be
     exactly equal (==, no tolerance) — the dual-path contract that makes
-    the BATCHED_ASSIGN_CELLS auto-switch invisible to every caller."""
+    the BATCHED_ASSIGN_CELLS switch invisible to every caller."""
     from epss_spark.operators import clustering
     from epss_spark.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     init = clustering.init_centroids_by_id(emb, [0, 61, 122, 183, 244, 305, 366, 427])
     cents = clustering.kmeans_fit(emb, init, n_iter=2, dim=64)
-    a = {
-        r.vec_id: (r.cluster_id, r.d2)
-        for r in clustering.assign_clusters(emb, cents, d2_col="d2", impl="codegen")
-        .select("vec_id", "cluster_id", "d2")
-        .collect()
-    }
-    b = {
-        r.vec_id: (r.cluster_id, r.d2)
-        for r in clustering.assign_clusters(emb, cents, d2_col="d2", impl="batched")
-        .select("vec_id", "cluster_id", "d2")
-        .collect()
-    }
+
+    def grab(form):
+        _assign_form(monkeypatch, form)
+        return {
+            r.vec_id: (r.cluster_id, r.d2)
+            for r in clustering.assign_clusters(emb, cents, d2_col="d2")
+            .select("vec_id", "cluster_id", "d2")
+            .collect()
+        }
+
+    a, b = grab("codegen"), grab("batched")
     assert len(a) == 500 and a == b
 
 
-def test_assign_clusters_batched_tie_breaks_lowest_index(spark):
+def test_assign_clusters_batched_tie_breaks_lowest_index(spark, monkeypatch):
     from epss_spark.operators import clustering
 
+    _assign_form(monkeypatch, "batched")
     df = spark.createDataFrame([(0, [5.0, 5.0])], "vec_id long, embedding array<float>")
-    out = clustering.assign_clusters(
-        df, [[0.0, 0.0], [10.0, 10.0]], impl="batched"
-    ).collect()
+    out = clustering.assign_clusters(df, [[0.0, 0.0], [10.0, 10.0]]).collect()
     assert out[0]["cluster_id"] == 0
 
 
 def test_assign_clusters_auto_dispatch_threshold(spark):
-    """auto = codegen at or below BATCHED_ASSIGN_CELLS centroid cells,
+    """Codegen at or below BATCHED_ASSIGN_CELLS centroid cells,
     the Arrow kernel above: the small-model plan must stay pure codegen
     (no Python) and the large-model plan must be map-only Arrow with no
     exchange and no O(k*dim) literal tree."""
@@ -3672,11 +3746,11 @@ def test_assign_clusters_auto_dispatch_threshold(spark):
     assert "Exchange" not in p_big  # map-only: assignment never shuffles
 
 
-def test_two_nearest_batched_bit_identical_to_codegen(spark):
+def test_two_nearest_batched_bit_identical_to_codegen(spark, monkeypatch):
     """The silhouette kernel's dual-path contract: per-row nearest
     cluster (lowest-index ties), own-centroid d2, AND second-nearest d2
     must be exactly equal (==, no tolerance) between the expression form
-    and the Arrow kernel — so cluster_silhouette's auto dispatch is
+    and the Arrow kernel — so cluster_silhouette's dispatch is
     invisible at any k."""
     from epss_spark.operators import clustering
     from epss_spark.tables import load_table
@@ -3685,29 +3759,27 @@ def test_two_nearest_batched_bit_identical_to_codegen(spark):
     init = clustering.init_centroids_by_id(emb, [0, 61, 122, 183, 244, 305, 366, 427])
     cents = clustering.kmeans_fit(emb, init, n_iter=2, dim=64)
 
-    def grab(impl):
-        return {
+    def grab(form):
+        _assign_form(monkeypatch, form)
+        rows = {
             r.vec_id: (r.cluster_id, r.a, r.b)
             for r in clustering.two_nearest_distances(
-                emb, cents, a_col="a", b_col="b", impl=impl
+                emb, cents, a_col="a", b_col="b"
             ).select("vec_id", "cluster_id", "a", "b").collect()
         }
+        # and the aggregated operator is byte-identical across forms too
+        sil = {
+            r.cluster_id: (r.n_points, r.avg_silhouette)
+            for r in clustering.cluster_silhouette(emb, cents).collect()
+        }
+        return rows, sil
 
-    a, b = grab("codegen"), grab("batched")
+    (a, s_cg), (b, s_ba) = grab("codegen"), grab("batched")
     assert len(a) == 500 and a == b
-    # and the aggregated operator is byte-identical across forms too
-    s_cg = {
-        r.cluster_id: (r.n_points, r.avg_silhouette)
-        for r in clustering.cluster_silhouette(emb, cents, impl="codegen").collect()
-    }
-    s_ba = {
-        r.cluster_id: (r.n_points, r.avg_silhouette)
-        for r in clustering.cluster_silhouette(emb, cents, impl="batched").collect()
-    }
     assert s_cg == s_ba and len(s_cg) == 8
 
 
-def test_two_nearest_batched_duplicate_min_distance(spark):
+def test_two_nearest_batched_duplicate_min_distance(spark, monkeypatch):
     """When the two nearest centroids are equidistant, the nearest index
     is the LOWEST (argmin first-min rule == struct-ordering sort) and
     the second-nearest distance equals the first — duplicates included,
@@ -3716,14 +3788,13 @@ def test_two_nearest_batched_duplicate_min_distance(spark):
 
     df = spark.createDataFrame([(0, [5.0, 0.0])], "vec_id long, embedding array<float>")
     cents = [[0.0, 0.0], [10.0, 0.0], [5.0, 7.0]]
-    for impl in ("codegen", "batched"):
-        r = clustering.two_nearest_distances(
-            df, cents, a_col="a", b_col="b", impl=impl
-        ).collect()[0]
-        assert (r.cluster_id, r.a, r.b) == (0, 25.0, 25.0), impl
+    for form in ("codegen", "batched"):
+        _assign_form(monkeypatch, form)
+        r = clustering.two_nearest_distances(df, cents, a_col="a", b_col="b").collect()[0]
+        assert (r.cluster_id, r.a, r.b) == (0, 25.0, 25.0), form
 
 
-def test_two_nearest_passthrough_column_collision(spark):
+def test_two_nearest_passthrough_column_collision(spark, monkeypatch):
     """two_nearest_distances is public: a caller frame already carrying a
     '__two' column (the codegen path's old fixed staging name) must pass
     through untouched on BOTH physical forms — the staging column is
@@ -3735,12 +3806,11 @@ def test_two_nearest_passthrough_column_collision(spark):
         "vec_id long, embedding array<float>, __two string",
     )
     cents = [[0.0, 0.0], [10.0, 0.0]]
-    for impl in ("codegen", "batched"):
-        r = clustering.two_nearest_distances(
-            df, cents, a_col="a", b_col="b", impl=impl
-        ).collect()[0]
-        assert r["__two"] == "keep-me", impl
-        assert (r.cluster_id, r.a, r.b) == (0, 25.0, 25.0), impl
+    for form in ("codegen", "batched"):
+        _assign_form(monkeypatch, form)
+        r = clustering.two_nearest_distances(df, cents, a_col="a", b_col="b").collect()[0]
+        assert r["__two"] == "keep-me", form
+        assert (r.cluster_id, r.a, r.b) == (0, 25.0, 25.0), form
 
 
 def test_cluster_silhouette_auto_dispatch_threshold(spark):
@@ -3765,10 +3835,10 @@ def test_cluster_silhouette_auto_dispatch_threshold(spark):
     assert "MapInPandas" in p_big
 
 
-def test_assign_batched_replaces_existing_columns_like_withcolumn(spark):
+def test_assign_batched_replaces_existing_columns_like_withcolumn(spark, monkeypatch):
     """A pre-existing column named cluster_id/d2 is REPLACED in place by
     the Arrow kernels (withColumn semantics), not duplicated — so the
-    auto dispatch can't turn a working small-k re-assignment call into a
+    dispatch can't turn a working small-k re-assignment call into a
     large-k duplicate-column failure."""
     from epss_spark.operators import clustering
 
@@ -3778,14 +3848,15 @@ def test_assign_batched_replaces_existing_columns_like_withcolumn(spark):
     )
     cents = [[0.0, 0.0], [10.0, 0.0]]
     got = {}
-    for impl in ("codegen", "batched"):
-        out = clustering.assign_clusters(df, cents, d2_col="d2", impl=impl)
-        assert out.columns == ["vec_id", "embedding", "cluster_id", "d2"], impl
-        got[impl] = {r.vec_id: (r.cluster_id, r.d2) for r in out.collect()}
+    for form in ("codegen", "batched"):
+        _assign_form(monkeypatch, form)
+        out = clustering.assign_clusters(df, cents, d2_col="d2")
+        assert out.columns == ["vec_id", "embedding", "cluster_id", "d2"], form
+        got[form] = {r.vec_id: (r.cluster_id, r.d2) for r in out.collect()}
     assert got["codegen"] == got["batched"] == {0: (0, 0.0), 1: (1, 1.0)}
 
 
-def test_farthest_first_init_batched_identical_picks(spark):
+def test_farthest_first_init_batched_identical_picks(spark, monkeypatch):
     """FF traversal picks are bit-identical whichever physical form the
     per-pick min-distance projection takes — the growing chosen-set
     prefix can ride the Arrow kernel at large k without changing the
@@ -3794,20 +3865,24 @@ def test_farthest_first_init_batched_identical_picks(spark):
     from epss_spark.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cg = clustering.farthest_first_init(emb, k=4, start_id=0, impl="codegen")
-    ba = clustering.farthest_first_init(emb, k=4, start_id=0, impl="batched")
-    assert cg == ba and len(cg) == 4
+    picks = {}
+    for form in ("codegen", "batched"):
+        _assign_form(monkeypatch, form)
+        picks[form] = clustering.farthest_first_init(emb, k=4, start_id=0)
+    assert picks["codegen"] == picks["batched"] and len(picks["codegen"]) == 4
 
 
-def test_kmeans_fit_batched_impl_bit_identical(spark):
+def test_kmeans_fit_batched_impl_bit_identical(spark, monkeypatch):
     from epss_spark.operators import clustering
     from epss_spark.tables import load_table
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     init = clustering.init_centroids_by_id(emb, [0, 61, 122, 183])
-    c_expr = clustering.kmeans_fit(emb, init, n_iter=2, dim=64, assign_impl="codegen")
-    c_arrow = clustering.kmeans_fit(emb, init, n_iter=2, dim=64, assign_impl="batched")
-    assert c_expr == c_arrow
+    models = {}
+    for form in ("codegen", "batched"):
+        _assign_form(monkeypatch, form)
+        models[form] = clustering.kmeans_fit(emb, init, n_iter=2, dim=64)
+    assert models["codegen"] == models["batched"]
 
 
 def test_sample_vectors_deterministic_and_oracle_portable(spark):
@@ -3987,7 +4062,7 @@ def test_drift_fraction_off_diagonal_mass(spark):
     assert moved == pytest.approx(0.25, abs=1e-12)
 
 
-def test_assignment_drift_batched_bit_identical_and_map_only(spark):
+def test_assignment_drift_batched_bit_identical_and_map_only(spark, monkeypatch):
     """The combined large-k drift kernel vs the expression form, on the
     real embeddings with two genuinely different models: identical
     contingency tables, and the batched plan is one Arrow pass + the
@@ -3998,11 +4073,13 @@ def test_assignment_drift_batched_bit_identical_and_map_only(spark):
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     init = clustering.init_centroids_by_id(emb, [0, 61, 122, 183, 244, 305, 366, 427])
     trained = clustering.kmeans_fit(emb, init, n_iter=2, dim=64)
+    _assign_form(monkeypatch, "codegen")
     want = {
         (r.cluster_before, r.cluster_after): r.n
-        for r in clustering.assignment_drift(emb, init, trained, impl="codegen").collect()
+        for r in clustering.assignment_drift(emb, init, trained).collect()
     }
-    got_df = clustering.assignment_drift(emb, init, trained, impl="batched")
+    _assign_form(monkeypatch, "batched")
+    got_df = clustering.assignment_drift(emb, init, trained)
     got = {(r.cluster_before, r.cluster_after): r.n for r in got_df.collect()}
     assert got == want and sum(got.values()) == 500
     p = got_df._jdf.queryExecution().executedPlan().toString()
@@ -4010,7 +4087,8 @@ def test_assignment_drift_batched_bit_identical_and_map_only(spark):
     assert final.count("MapInPandas") == 1
     assert final.count("Scan parquet") == 1  # ONE corpus scan for both argmins
     assert "Join" not in final
-    # auto dispatch: two k=8 models stay on the expression path; a large
+    monkeypatch.undo()  # back to the shipped threshold
+    # dispatch: two k=8 models stay on the expression path; a large
     # candidate model routes the whole gate through the kernel
     p_small = (
         clustering.assignment_drift(emb, init, trained)
@@ -4161,7 +4239,7 @@ def test_cluster_silhouette_semantics(spark):
         clustering.cluster_silhouette(df, [[0.0, 0.0]])
 
 
-def test_cluster_boundary_semantics(spark):
+def test_cluster_boundary_semantics(spark, monkeypatch):
     """Boundary-mass report: a point near the midline between two cells
     (small b - a margin) is flagged, a point deep inside its cell is
     not, and avg_margin is the quantized mean of b - a."""
@@ -4180,10 +4258,13 @@ def test_cluster_boundary_semantics(spark):
     r0 = got[0]
     assert r0.n_points == 2 and r0.n_boundary == 1
     assert r0.avg_margin == pytest.approx((2.0 + 100.0) / 2, abs=1e-6)
-    # forced-impl parity on the same data (small shape, both forms legal)
-    cg = clustering.cluster_boundary(df, cents, threshold=3.0, impl="codegen").collect()
-    ba = clustering.cluster_boundary(df, cents, threshold=3.0, impl="batched").collect()
-    assert sorted(map(tuple, cg)) == sorted(map(tuple, ba))
+    # forced-form parity on the same data (small shape, both forms legal)
+    reports = []
+    for form in ("codegen", "batched"):
+        _assign_form(monkeypatch, form)
+        rows = clustering.cluster_boundary(df, cents, threshold=3.0).collect()
+        reports.append(sorted(map(tuple, rows)))
+    assert reports[0] == reports[1]
 
 
 # ---------------------------------------------------------------------------
@@ -4208,10 +4289,10 @@ def test_classifier_learns_stopword_signal(spark):
     assert acc > base + 0.10
 
 
-def test_classifier_score_dual_path_bit_identical(spark):
+def test_classifier_score_dual_path_bit_identical(spark, monkeypatch):
     """linear_score's Arrow kernel == the codegen chain, bit-for-bit, on
-    a dim where both forms are legal — and the auto dispatch routes
-    above BATCHED_SCORE_DIMS without changing a single float."""
+    a dim where both forms are legal — and the dispatch routes above
+    BATCHED_SCORE_DIMS without changing a single float."""
     import random
 
     from epss_spark.operators import classifier
@@ -4222,12 +4303,15 @@ def test_classifier_score_dual_path_bit_identical(spark):
     df = spark.createDataFrame(rows, "id long, x array<double>")
     w = [rng.uniform(-1, 1) for _ in range(dim)]
     b = 0.375
-    expr = {r.id: r.score for r in classifier.linear_score(df, w, b, impl="expr").collect()}
-    batched = {
-        r.id: r.score for r in classifier.linear_score(df, w, b, impl="batched").collect()
-    }
-    assert expr == batched  # exact float equality, not approx
-    # large-dim: auto must take the batched path (the chain would blow janino)
+
+    def score(form):
+        with monkeypatch.context() as m:
+            dims = -1 if form == "batched" else float("inf")
+            m.setattr(classifier, "BATCHED_SCORE_DIMS", dims)
+            return {r.id: r.score for r in classifier.linear_score(df, w, b).collect()}
+
+    assert score("expr") == score("batched")  # exact float equality, not approx
+    # large-dim: the dispatch takes the batched path (the chain would blow janino)
     big_dim = classifier.BATCHED_SCORE_DIMS + 32
     big = spark.createDataFrame(
         [(0, [0.5] * big_dim), (1, [-0.25] * big_dim)], "id long, x array<double>"
@@ -4265,6 +4349,23 @@ def test_classifier_zero_token_and_null_text(spark):
     assert s[1] == 0.5 + 0.5 * (-0.5 / (1.0 + 0.5))
 
 
+def test_linear_score_dispatch_threshold(spark):
+    """Codegen chain at BATCHED_SCORE_DIMS weights (no Python in the
+    plan), the Arrow kernel one dim above it — map-only, no exchange."""
+    from epss_spark.operators import classifier
+
+    def plan(dim):
+        df = spark.createDataFrame([(0, [0.5] * dim)], "id long, x array<double>")
+        scored = classifier.linear_score(df, [0.01] * dim, 0.0)
+        return scored._jdf.queryExecution().executedPlan().toString()
+
+    at = plan(classifier.BATCHED_SCORE_DIMS)
+    assert "MapInPandas" not in at and "EvalPython" not in at
+    above = plan(classifier.BATCHED_SCORE_DIMS + 1)
+    assert "MapInPandas" in above
+    assert "Exchange" not in above  # map-only: scoring never shuffles
+
+
 def test_classifier_fit_validations(spark):
     from epss_spark.operators import classifier
 
@@ -4277,22 +4378,15 @@ def test_classifier_fit_validations(spark):
     empty = good.filter("y > 5")
     with pytest.raises(ValueError, match="empty training input"):
         classifier.linear_fit(empty, dim=1, n_epochs=1)
-    # dim > BATCHED_SCORE_DIMS trains via the Arrow path; FORCING the
-    # expression aggregate there is the refused combination
-    with pytest.raises(ValueError, match="janino-hostile"):
-        classifier.linear_fit(good, dim=600, n_epochs=1, impl="expr")
-    with pytest.raises(ValueError, match="impl must be"):
-        classifier.linear_score(good, [0.0], 0.0, impl="nope")
-    with pytest.raises(ValueError, match="impl must be"):
-        classifier.linear_fit(good, dim=1, n_epochs=1, impl="nope")
 
 
 def test_classifier_fit_dual_path_bit_identical(spark):
-    """linear_fit's Arrow partial-sum gradient path == the expression
-    aggregate, bit-for-bit across epochs (quantized BIGINT sums
-    commute; the per-row arithmetic is the same IEEE sequence), on a
-    multi-partition input so the batched form actually folds several
-    partials — and a large-dim fit runs end-to-end on the Arrow path."""
+    """linear_fit's Arrow partial-sum gradient kernel == the expression
+    aggregate, bit-for-bit at every model point of a fit (quantized
+    BIGINT sums commute; the per-row arithmetic is the same IEEE
+    sequence), on a multi-partition input so the batched form actually
+    folds several partials — and a large-dim fit runs end-to-end on
+    the Arrow path."""
     import random
 
     from epss_spark.operators import classifier
@@ -4306,11 +4400,16 @@ def test_classifier_fit_dual_path_bit_identical(spark):
     df = spark.createDataFrame(rows, "x array<double>, y double").repartition(8)
     df.persist()
     try:
-        we, be = classifier.linear_fit(df, dim=dim, n_epochs=4, impl="expr")
-        wb, bb = classifier.linear_fit(df, dim=dim, n_epochs=4, impl="batched")
+        # the zero start, a random model, and two points of a fit's path
+        points = [([0.0] * dim, 0.0), ([rng.uniform(-1, 1) for _ in range(dim)], 0.25)]
+        points += [classifier.linear_fit(df, dim=dim, n_epochs=e) for e in (1, 3)]
+        y = F.col("y").cast("double")
+        for w, b in points:
+            expr = classifier._gradient_expr(df, w, b, "x", y, dim, classifier.QUANT)
+            batched = classifier._gradient_batched(df, w, b, "x", "y", classifier.QUANT)
+            assert expr == batched  # exact integer sums
     finally:
         df.unpersist()
-    assert we == wb and be == bb  # exact float equality
     # large-dim end-to-end (auto -> batched): trains without a janino blowup
     big_dim = classifier.BATCHED_SCORE_DIMS + 64
     big = spark.createDataFrame(

@@ -13,13 +13,14 @@ same dual-path trade as pq_topk vs pq_topk_batched.
 
 Both forms are pinned bit-identical (tests/test_operators_ext.py), so
 this probe measures COST only: wall time for a full assign+count over a
-replicated embedding corpus, per impl, per k. Expect codegen to win or
+replicated embedding corpus, per form, per k. Expect codegen to win or
 tie through a few hundred cells' worth of k and degrade superlinearly
 past ~1k centroids while the batched kernel stays near-flat; the
-BATCHED_ASSIGN_CELLS auto threshold (512 cells = k*dim, set from this
+BATCHED_ASSIGN_CELLS dispatch threshold (512 cells = k*dim, set from this
 probe's measured ladder) keeps only the oracle-checked small shapes on
 the expression path — every larger model crosses to the kernel well
-before the codegen cliff.
+before the codegen cliff. Each rung forces its form by moving that
+module threshold below (batched) or above (codegen) every model size.
 
 Round 13 adds `op`: the same ladder can price the OTHER centroid-model
 projections that ride the dual dispatch —
@@ -47,6 +48,7 @@ Prints one JSON line:
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -87,19 +89,20 @@ def main() -> None:
     corpus = spark.read.parquet("/tmp/assign_probe_corpus")
     n = corpus.count()
 
-    def run(impl: str, k: int, cents) -> float:
+    def run(form: str, k: int, cents) -> float:
+        clustering.BATCHED_ASSIGN_CELLS = -1 if form == "batched" else math.inf
         t0 = time.monotonic()
         if op == "silhouette":
-            clustering.cluster_silhouette(corpus, cents, impl=impl).collect()
+            clustering.cluster_silhouette(corpus, cents).collect()
         elif op == "ff":
-            clustering.farthest_first_init(corpus, k=k, start_id=0, impl=impl)
+            clustering.farthest_first_init(corpus, k=k, start_id=0)
         elif op == "kmpp":
             clustering.kmeans_parallel_init(
                 corpus, k=k, start_id=0, n_rounds=2, oversample=2.0 * k,
-                n_iter_local=2, dim=64, impl=impl,
+                n_iter_local=2, dim=64,
             )
         else:
-            out = clustering.assign_clusters(corpus, cents, impl=impl)
+            out = clustering.assign_clusters(corpus, cents)
             out.groupBy("cluster_id").count().collect()
         return round(time.monotonic() - t0, 3)
 

@@ -9,10 +9,14 @@ bit-identical in tests, so this probe measures COST only:
   score     linear_score over a synthetic feature corpus — the codegen
             chain compiles D multiply-adds into the expression tree
             (janino-hostile past ~512 terms), the kernel ships the
-            weight vector in the closure (plan O(1) in D).
-  epoch     one linear_fit gradient epoch — the codegen aggregate is
-            D+2 sum expressions (plan grows with D), the kernel emits
-            per-batch partial integer sums and folds them driver-side.
+            weight vector in the closure (plan O(1) in D). Each rung
+            forces its form by moving BATCHED_SCORE_DIMS below (batched)
+            or above (expr) the ladder's dim.
+  epoch     one linear_fit gradient epoch, timed on the two kernels
+            directly (_gradient_expr / _gradient_batched) — the codegen
+            aggregate is D+2 sum expressions (plan grows with D), the
+            kernel emits per-batch partial integer sums and folds them
+            driver-side.
 
 Expect both expression forms roughly linear in D with a HARD stop at
 ~512 terms — plan construction of the deep left-leaning Add tree
@@ -35,6 +39,7 @@ op=score. Prints one JSON line:
 from __future__ import annotations
 
 import json
+import math
 import os
 import sys
 import time
@@ -51,6 +56,16 @@ def synth_weights(dim: int) -> list[float]:
     return [((7 * j) % 997) / 997.0 - 0.5 for j in range(dim)]
 
 
+def epoch(feats, w: list[float], form: str) -> None:
+    """One gradient epoch of linear_fit on the chosen kernel."""
+    if form == "batched":
+        classifier._gradient_batched(feats, w, 0.25, "x", "y", classifier.QUANT)
+    else:
+        classifier._gradient_expr(
+            feats, w, 0.25, "x", F.col("y").cast("double"), len(w), classifier.QUANT
+        )
+
+
 def main() -> None:
     rows = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     ladder = (
@@ -65,14 +80,16 @@ def main() -> None:
     spark = get_spark("classifier-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
+    shipped_dims = classifier.BATCHED_SCORE_DIMS  # rungs move the module value
     # session warmup so the first rung is not billed for JVM/Arrow
     # first-call costs (the bench warmup-pair lesson)
     warm = spark.createDataFrame(
         [([0.5] * 8, 1.0), ([0.25] * 8, 0.0)], "x array<double>, y double"
     )
-    classifier.linear_score(warm, [0.1] * 8, 0.0, impl="batched").collect()
-    classifier.linear_fit(warm, dim=8, n_epochs=1, impl="batched")
-    classifier.linear_fit(warm, dim=8, n_epochs=1, impl="expr")
+    classifier.BATCHED_SCORE_DIMS = -1
+    classifier.linear_score(warm, [0.1] * 8, 0.0).collect()
+    epoch(warm, [0.1] * 8, "batched")
+    epoch(warm, [0.1] * 8, "expr")
 
     out = {}
     for dim in ladder:
@@ -95,23 +112,22 @@ def main() -> None:
         corpus.count()
         w = synth_weights(dim)
 
-        def run(impl: str) -> float:
+        def run(form: str) -> float:
+            classifier.BATCHED_SCORE_DIMS = -1 if form == "batched" else math.inf
             t0 = time.monotonic()
             if op == "score":
-                classifier.linear_score(corpus, w, 0.25, impl=impl).agg(
+                classifier.linear_score(corpus, w, 0.25).agg(
                     F.sum("score")
                 ).collect()
             else:
-                classifier.linear_fit(
-                    corpus, dim=dim, n_epochs=1, impl=impl
-                )
+                epoch(corpus, w, form)
             return round(time.monotonic() - t0, 3)
 
         row = {"batched_sec": run("batched")}
-        # linear_fit refuses a forced expr aggregate above the dispatch
-        # threshold (the chain is a crash risk, not just slow)
+        # the expr gradient aggregate above the dispatch threshold is a
+        # crash risk, not just slow
         expr_cap = (
-            min(max_expr_dim, classifier.BATCHED_SCORE_DIMS)
+            min(max_expr_dim, shipped_dims)
             if op == "epoch"
             else max_expr_dim
         )

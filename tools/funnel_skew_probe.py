@@ -1,9 +1,11 @@
 """Skewed-key probe for the funnel fold (PERF.md round-9): one bot key
 holds `hot_frac` of ALL events — the shape that melts any per-key array
-materialization. Compares the default chunked prefix-fold (bounded
-per-task memory: ceil(events/chunk_size) transition tables) against the
-monolithic collect_list fold (one array per key, the round-8 design) on
-the same synthetic workload, and checks the two agree.
+materialization. Compares the chunked prefix-fold event_funnel runs
+(funnel_fold_states — bounded per-task memory: ceil(events/chunk_size)
+transition tables) against the monolithic collect_list reference fold
+(_funnel_states_monolithic — one array per key, the round-8 design) on
+the same synthetic workload, each timed to its per-step histogram, and
+checks the two agree.
 
 Usage: python tools/funnel_skew_probe.py [n_events] [hot_frac]
 Prints one JSON line:
@@ -58,26 +60,27 @@ def main() -> None:
         .localCheckpoint()
     )
     steps = ["signup", "view", "purchase"]
+    args = ("user_id", "event_type", "ts", "event_id", 86_400)
 
-    def timed(chunk_size):
+    def chunked(frame):
+        return sessionize.funnel_fold_states(frame, steps, *args)
+
+    def monolithic(frame):
+        return sessionize._funnel_states_monolithic(frame, steps, *args)
+
+    def timed(fold):
         t0 = time.monotonic()
-        rows = sorted(
-            map(
-                tuple,
-                sessionize.event_funnel(
-                    ev, steps, max_gap_seconds=86_400, chunk_size=chunk_size
-                ).collect(),
-            )
-        )
-        return round(time.monotonic() - t0, 2), rows
+        steps_ev = ev.filter(F.col("event_type").isin(steps))
+        hist = sorted(map(tuple, fold(steps_ev).groupBy("step").count().collect()))
+        return round(time.monotonic() - t0, 2), hist
 
     # warm both kernels once at small scale
     small = ev.limit(10_000).localCheckpoint()
-    sessionize.event_funnel(small, steps, chunk_size=65536).collect()
-    sessionize.event_funnel(small, steps, chunk_size=None).collect()
+    chunked(small).collect()
+    monolithic(small).collect()
 
-    chunked_sec, chunked_rows = timed(65536)
-    mono_sec, mono_rows = timed(None)
+    chunked_sec, chunked_rows = timed(chunked)
+    mono_sec, mono_rows = timed(monolithic)
     print(
         json.dumps(
             {
