@@ -5,19 +5,53 @@ loop: thread-pool per-day reads, pairwise diffs, concat (epss/client.py:
 dataset: pruned scan -> window lag-diff -> filter -> sort. Catalyst handles
 partition pruning, shuffle planning, and codegen; execution crosses
 driver->executor once, at the action.
+
+Over a `scores_path` root, each call resolves its date range to `date=`
+partition directories while the query is built: one driver-side listing
+of the root's children, then a read of only the directories in range
+with the canonical schema. Without that, a root of more than 32 days
+makes every call run two eager Spark jobs before its action (a parallel
+partition listing and a Parquet-footer schema inference). The `date`
+filters stay in the plan, so `PartitionFilters` still shows. Nothing is
+cached between calls: every call lists the root again and sees the
+store as it is then, including days appended or overwritten after the
+client was created.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+import re
 from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from epss_spark.functions.scalars import TIME, parse_date
 from epss_spark.operators.quantize import quantize
 from epss_spark.plans.query import Query, apply_query
+from epss_spark.schemas import SCORES_SCHEMA
+
+# What a file read of the `date=` layout yields: the data columns, then the
+# partition column, all nullable. An empty range gets a frame of this schema.
+_STORE_SCHEMA = StructType(
+    [StructField(f.name, f.dataType, True) for f in SCORES_SCHEMA.fields if f.name != "date"]
+    + [StructField("date", SCORES_SCHEMA["date"].dataType, True)]
+)
+_PARTITION_DATE = re.compile(r"date=(\d{4})-(\d{1,2})-(\d{1,2})")
+
+
+def _partition_date(name: str) -> dt.date | None:
+    """The day of a `date=yyyy-[m]m-[d]d` directory name, read as leniently
+    as Spark's string-to-date cast reads the partition value; None for any
+    other name (`_SUCCESS`, `_temporary`, `date=2023-02-30`)."""
+    m = _PARTITION_DATE.fullmatch(name)
+    try:
+        return dt.date(*map(int, m.groups())) if m else None
+    except ValueError:
+        return None
 
 # Model-version epochs (reference: epss/constants.py:11-14, NOTES.md:9-11)
 EPOCHS: dict[str, tuple[dt.date, dt.date | None]] = {
@@ -73,10 +107,40 @@ class EPSSClient:
         self.max_date_resolver = max_date_resolver
         self._persisted: DataFrame | None = None
 
-    def _scan(self) -> DataFrame:
+    def _scan(self, lo: dt.date, hi: dt.date) -> DataFrame:
+        """The score rows the caller's `lo <= date <= hi` filter can keep.
+
+        For `scores_path`, the range is resolved to `date=` directories now,
+        from one listing of the root (a constant number of py4j round trips
+        whatever the directory count), and only those are read, with the
+        canonical schema: no footer inference, and no parallel listing job
+        for ranges of up to 32 days. Entries whose value does not parse as
+        a date are skipped, as the range filter drops them. The listing is
+        not cached, so every call sees the current store. A root that
+        cannot be listed is handed to the reader, which raises as an
+        unpruned read does. Callers keep their `date` filters, so the plan
+        still shows `PartitionFilters`."""
         if self.table is not None:
             return self.spark.table(self.table)
-        return self.spark.read.parquet(self.scores_path)
+        jvm = self.spark._jvm
+        hfs = jvm.org.apache.hadoop.fs
+        try:
+            root = hfs.Path(self.scores_path)
+            fs = root.getFileSystem(self.spark._jsparkSession.sessionState().newHadoopConf())
+            paths = hfs.FileUtil.stat2Paths(fs.listStatus(root))
+        except Py4JJavaError:
+            return self.spark.read.schema(SCORES_SCHEMA).parquet(self.scores_path)
+        # one round trip for the whole listing instead of one per entry
+        listing = jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray(paths).mkString("\n")
+        dirs = []
+        for path in listing.split("\n"):
+            day = _partition_date(path.rsplit("/", 1)[-1])
+            if day is not None and lo <= day <= hi:
+                dirs.append(path)
+        if not dirs:
+            return self.spark.createDataFrame([], _STORE_SCHEMA)
+        reader = self.spark.read.schema(SCORES_SCHEMA).option("basePath", self.scores_path)
+        return reader.parquet(*dirs)
 
     def get_scores(
         self,
@@ -99,7 +163,8 @@ class EPSSClient:
         needs no intermediate persist (that exists solely so the sort's
         range-partitioner sampling pass doesn't re-execute the window)."""
         lo, hi = get_date_range(self.version, min_date, max_date, self.max_date_resolver)
-        df = self._scan()
+        # drop_unchanged also reads the warm-up day before lo (see quantize)
+        df = self._scan(lo - dt.timedelta(days=1) if drop_unchanged else lo, hi)
         if query is not None:
             # Predicates apply BEFORE quantization, matching the reference,
             # which filters each day's snapshot and then diffs the survivors
@@ -148,7 +213,7 @@ class EPSSClient:
         """Single-snapshot path (reference: epss/client.py:239-268): one
         pruned partition read + predicate stack + canonical order."""
         d = parse_date(date)
-        out = self._scan().filter(F.col("date") == F.lit(d))
+        out = self._scan(d, d).filter(F.col("date") == F.lit(d))
         if query is not None:
             out = apply_query(out, query)
         return out.select("date", "cve", "epss", "percentile").orderBy(

@@ -18,6 +18,7 @@ skew, not as a default speedup.
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame
@@ -127,6 +128,14 @@ def repartition_for_window(df: DataFrame, key: str, partitions: int | None = Non
     return df.repartition(partitions, key) if partitions else df.repartition(key)
 
 
+# The flag is session-global, so overlapping scopes (threads, nested calls)
+# share one change: the first to enter records the session's value and sets
+# `false`, the last to leave restores it. A query outside every scope still
+# sees `false` while one is open. id(session) -> [open scopes, value].
+_coalesce_lock = threading.Lock()
+_coalesce_scopes: dict[int, list] = {}
+
+
 @contextmanager
 def size_coalesced_shuffles(spark):
     """Scope AQE's SIZE-based shuffle coalescing to a bounded-frame
@@ -148,12 +157,21 @@ def size_coalesced_shuffles(spark):
     never changes what exact aggregates/joins compute), only task
     counts."""
     key = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = "true"
-    spark.conf.set(key, "false")
+    with _coalesce_lock:
+        scope = _coalesce_scopes.get(id(spark))
+        if scope is None:
+            try:
+                prev = spark.conf.get(key)
+            except Exception:
+                prev = "true"
+            spark.conf.set(key, "false")
+            scope = _coalesce_scopes[id(spark)] = [0, prev]
+        scope[0] += 1
     try:
         yield
     finally:
-        spark.conf.set(key, prev)
+        with _coalesce_lock:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _coalesce_scopes[id(spark)]
+                spark.conf.set(key, scope[1])

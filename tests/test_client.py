@@ -4,12 +4,15 @@ dataset (the canonical physical layout, FIXTURES.md §1.2)."""
 from __future__ import annotations
 
 import datetime as dt
+import os
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from epss_spark.client import EPSSClient, get_date_range
-from epss_spark.plans.query import Query
+from epss_spark.operators.quantize import quantize
+from epss_spark.plans.query import Query, apply_query
 from epss_spark.sources.readers import date_partitioned_write
 
 D = dt.date
@@ -62,9 +65,11 @@ def test_get_scores_by_date_partition_pruning(spark, scores_path):
     client = EPSSClient(spark, scores_path)
     df = client.get_scores_by_date(D(2023, 3, 9))
     assert df.count() == 2
-    # the physical plan must prune to a single date partition
+    # the scan reads a single date partition, and the plan keeps the filter
+    files = df.inputFiles()
+    assert files and all("/date=2023-03-09/" in f for f in files)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan or df.count() == 2
+    assert "PartitionFilters" in plan
 
 
 def test_get_scores_with_query(spark, scores_path):
@@ -93,3 +98,142 @@ def test_query_filters_before_diff(spark, tmp_path):
     client = EPSSClient(spark, root, max_date_resolver=lambda: D(2023, 3, 10))
     out = client.get_changed_scores("2023-03-07", "2023-03-10", query=Query(min_value=0.4)).collect()
     assert [(r.date, r.epss) for r in out] == [(D(2023, 3, 7), 0.5)]
+
+
+CANONICAL = ["date", "cve", "epss", "percentile"]
+
+
+def _reference(spark, root, lo, hi, query=None, drop_unchanged=False):
+    """get_scores as an unpruned read of the whole root plus the date
+    filters, predicates, quantization and canonical order."""
+    df = spark.read.parquet(root)
+    if query is not None:
+        df = apply_query(df, query)
+    if drop_unchanged:
+        out = quantize(df, key="cve", time="date", value="epss", min_time=lo, max_time=hi).drop("delta")
+    else:
+        out = df.filter((F.col("date") >= F.lit(lo)) & (F.col("date") <= F.lit(hi)))
+    return out.select(*CANONICAL).orderBy(F.col("date").asc(), F.col("cve").desc())
+
+
+def _same(got, want):
+    # schema equality includes names, order and nullability, so an empty
+    # range must come back as the same four canonical columns
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+@pytest.fixture(scope="module")
+def gappy_path(spark, tmp_path_factory):
+    """2023-03-07 .. 2023-03-14 without 2023-03-10, plus the entries a real
+    store root carries that are not days: `_SUCCESS` and a `_temporary/`
+    directory holding an uncommitted day."""
+    root = str(tmp_path_factory.mktemp("gappy") / "scores")
+    rows = []
+    for d in range(8):
+        date = D(2023, 3, 7) + dt.timedelta(days=d)
+        if date == D(2023, 3, 10):
+            continue
+        for k in range(4):
+            epss = None if (k, d) == (3, 5) else [0.1, 0.1, 0.2, 0.4][(k * d) % 4]
+            rows.append((date, f"CVE-{k}", epss, 0.1 * k + 0.05))
+    df = spark.createDataFrame(rows, "date date, cve string, epss double, percentile double")
+    date_partitioned_write(df, root)
+    stray = spark.createDataFrame([(D(2023, 3, 9), "CVE-Z", 0.9, 0.9)], df.schema)
+    stray.write.partitionBy("date").parquet(os.path.join(root, "_temporary", "0"))
+    assert os.path.exists(os.path.join(root, "_SUCCESS"))
+    return root
+
+
+@pytest.mark.parametrize(
+    "lo,hi",
+    [
+        (D(2023, 3, 10), D(2023, 3, 12)),  # starts on the missing day
+        (D(2023, 3, 8), D(2023, 3, 10)),  # ends on the missing day
+        (D(2023, 3, 11), D(2023, 3, 14)),  # warm-up day is the missing one
+        (D(2023, 4, 1), D(2023, 4, 5)),  # wholly outside the data
+        (D(2023, 3, 12), D(2023, 3, 9)),  # min_date > max_date
+    ],
+)
+def test_range_resolved_scan_matches_unpruned_read(spark, gappy_path, lo, hi):
+    client = EPSSClient(spark, gappy_path, max_date_resolver=lambda: D(2023, 4, 30))
+    q = Query(ids=("CVE-1", "CVE-3"), min_value=0.1)
+    for query in (None, q):
+        for drop in (False, True):
+            got = client.get_scores(lo, hi, query=query, drop_unchanged=drop)
+            _same(got, _reference(spark, gappy_path, lo, hi, query, drop))
+        _same(
+            client.get_changed_scores(lo, hi, query=query),
+            _reference(spark, gappy_path, lo, hi, query, drop_unchanged=True),
+        )
+    client.close()
+
+
+def test_range_resolved_snapshot_matches_unpruned_read(spark, gappy_path):
+    client = EPSSClient(spark, gappy_path)
+    q = Query(min_percentile=0.2)
+    for d in (D(2023, 3, 9), D(2023, 3, 10), D(2023, 5, 1)):
+        for query in (None, q):
+            want = spark.read.parquet(gappy_path).filter(F.col("date") == F.lit(d))
+            if query is not None:
+                want = apply_query(want, query)
+            want = want.select(*CANONICAL).orderBy(F.col("cve").desc(), F.col("date").asc())
+            _same(client.get_scores_by_date(d, query), want)
+
+
+def test_missing_root_raises_when_the_query_is_built(spark, tmp_path):
+    client = EPSSClient(spark, str(tmp_path / "absent"))
+    with pytest.raises(AnalysisException):
+        client.get_scores_by_date(D(2023, 3, 9))
+
+
+def test_every_call_sees_the_current_store(spark, tmp_path):
+    """No listing is cached: a day appended, or a day overwritten, after
+    the client was created shows in the next call."""
+    root = str(tmp_path / "scores")
+    schema = "date date, cve string, epss double, percentile double"
+    rows = [(D(2023, 3, 7) + dt.timedelta(days=d), "CVE-A", 0.1, 0.5) for d in range(3)]
+    date_partitioned_write(spark.createDataFrame(rows, schema), root)
+    client = EPSSClient(spark, root, max_date_resolver=lambda: D(2023, 3, 31))
+    assert client.get_scores_by_date(D(2023, 3, 10)).count() == 0
+    assert client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 10)).count() == 0
+
+    day = spark.createDataFrame([(D(2023, 3, 10), "CVE-A", 0.3, 0.7)], schema)
+    date_partitioned_write(day, root, dynamic=True)
+    got = client.get_scores_by_date(D(2023, 3, 10)).collect()
+    assert [(r.date, r.cve, r.epss) for r in got] == [(D(2023, 3, 10), "CVE-A", 0.3)]
+
+    day = spark.createDataFrame([(D(2023, 3, 8), "CVE-A", 0.2, 0.6)], schema)
+    date_partitioned_write(day, root, dynamic=True)
+    got = client.get_changed_scores(D(2023, 3, 8), D(2023, 3, 10)).collect()
+    assert [(r.date, r.epss) for r in got] == [
+        (D(2023, 3, 8), 0.2),
+        (D(2023, 3, 9), 0.1),
+        (D(2023, 3, 10), 0.3),
+    ]
+    client.close()
+
+
+def test_building_client_queries_launches_no_spark_job(spark, tmp_path):
+    """40 `date=` directories is above Spark's 32-path parallel-listing
+    threshold: an unpruned read of the root lists it with a Spark job and
+    infers the schema from Parquet footers with another, both while the
+    query is built. Resolving the range first leaves the builder job-free."""
+    root = str(tmp_path / "scores")
+    rows = [(D(2023, 3, 7) + dt.timedelta(days=d), "CVE-A", d / 100.0, 0.5) for d in range(40)]
+    date_partitioned_write(
+        spark.createDataFrame(rows, "date date, cve string, epss double, percentile double"), root
+    )
+    client = EPSSClient(spark, root, max_date_resolver=lambda: D(2023, 4, 30))
+    sc = spark.sparkContext
+    group = "test-client-construct"
+    sc.setJobGroup(group, "build client queries without running them")
+    try:
+        snapshot = client.get_scores_by_date(D(2023, 3, 20))
+        changed = client.get_changed_scores(D(2023, 3, 10), D(2023, 4, 8))
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
+    assert snapshot.count() == 1
+    assert changed.count() == 30
+    client.close()

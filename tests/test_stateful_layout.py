@@ -3,11 +3,17 @@
 from __future__ import annotations
 
 import shutil
+import threading
 
 import pytest
 from pyspark.sql import functions as F
 
-from epss_spark.operators.layout import repartition_for_window, salted_agg, write_bucketed
+from epss_spark.operators.layout import (
+    repartition_for_window,
+    salted_agg,
+    size_coalesced_shuffles,
+    write_bucketed,
+)
 from epss_spark.operators.quantize import changed_scores
 from epss_spark.tables import load_table
 
@@ -160,6 +166,94 @@ def test_bucketed_quantization_zero_exchanges(spark, tmp_path):
         )
     finally:
         spark.sql("DROP TABLE IF EXISTS bt_scores_q")
+
+
+PARALLELISM_FIRST = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
+
+
+def test_size_coalesced_shuffles_overlapping_threads_restore(spark):
+    """Thread A enters, B enters, A leaves, B leaves. The flag must stay
+    `false` while B is still inside, then come back to the session's value
+    (an unlocked scope let B record A's `false` and leave it set)."""
+    prev = spark.conf.get(PARALLELISM_FIRST)
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen, errors = {}, []
+
+    def scoped(name, after_enter, wait_for):
+        try:
+            with size_coalesced_shuffles(spark):
+                after_enter.set()
+                assert wait_for.wait(30)
+                seen[name] = spark.conf.get(PARALLELISM_FIRST)
+            if name == "a":
+                a_out.set()
+        except Exception as exc:  # surfaced on the main thread below
+            errors.append(exc)
+            for event in (a_in, b_in, a_out):
+                event.set()
+
+    spark.conf.set(PARALLELISM_FIRST, "true")
+    try:
+        a = threading.Thread(target=scoped, args=("a", a_in, b_in))
+        b = threading.Thread(target=scoped, args=("b", b_in, a_out))
+        a.start()
+        assert a_in.wait(30)
+        b.start()
+        a.join(60)
+        b.join(60)
+        assert not a.is_alive() and not b.is_alive()
+        assert not errors and seen == {"a": "false", "b": "false"}
+        assert spark.conf.get(PARALLELISM_FIRST) == "true"
+    finally:
+        spark.conf.set(PARALLELISM_FIRST, prev)
+
+
+def test_size_coalesced_shuffles_nested_scope_restores(spark):
+    prev = spark.conf.get(PARALLELISM_FIRST)
+    spark.conf.set(PARALLELISM_FIRST, "true")
+    try:
+        with size_coalesced_shuffles(spark):
+            with size_coalesced_shuffles(spark):
+                assert spark.conf.get(PARALLELISM_FIRST) == "false"
+            assert spark.conf.get(PARALLELISM_FIRST) == "false"
+        assert spark.conf.get(PARALLELISM_FIRST) == "true"
+    finally:
+        spark.conf.set(PARALLELISM_FIRST, prev)
+
+
+def test_size_coalesced_shuffles_thread_stress(spark):
+    """More threads than cores entering and leaving at random: whoever is
+    inside always sees `false`, and the session's value is back at the end."""
+    import random
+    import sys
+
+    prev, interval = spark.conf.get(PARALLELISM_FIRST), sys.getswitchinterval()
+    inside_values, errors = [], []
+
+    def churn(seed):
+        rng = random.Random(seed)
+        try:
+            for _ in range(15):
+                with size_coalesced_shuffles(spark):
+                    if rng.random() < 0.5:
+                        inside_values.append(spark.conf.get(PARALLELISM_FIRST))
+        except Exception as exc:  # surfaced on the main thread below
+            errors.append(exc)
+
+    spark.conf.set(PARALLELISM_FIRST, "true")
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=churn, args=(i,)) for i in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors and inside_values and set(inside_values) == {"false"}
+        assert spark.conf.get(PARALLELISM_FIRST) == "true"
+    finally:
+        sys.setswitchinterval(interval)
+        spark.conf.set(PARALLELISM_FIRST, prev)
 
 
 def test_repartition_for_window_single_exchange(spark):
