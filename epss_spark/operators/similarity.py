@@ -9,9 +9,14 @@ Three tiers, trading recall for scale:
 - lsh_topk: random-hyperplane (sign) LSH — candidates share the query's
   bucket, turning the scan into a bucket-pruned join. The scale path.
 
-Dot products run as zip_with + aggregate — higher-order built-ins inside
-codegen, not Python UDFs. Scores are computed in float64 and rounded to 6 dp
-so results are stable across engines and summation strategies.
+Per-row dots and norms are zip_with + aggregate expressions: a
+sequential left fold over the dimension index in float64, inside the
+plan. The blocked all-pairs scan is the exception: cosine_pairs_blocked
+scores each block in one Arrow-batched numpy kernel that folds in the
+same order, so its operands are bit-identical to the expression form.
+Every score is round(try_divide(dot, |a| * |b|), 6): stable across
+engines and summation strategies, and NULL (never an error) when a side
+has zero norm.
 """
 
 from __future__ import annotations
@@ -32,8 +37,16 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
+def _cos_from(dot: Column, nn: Column, dp: int = 6) -> Column:
+    """The one cosine score expression: dot / (norm product), rounded to
+    `dp`. try_divide makes a zero norm product score NULL instead of
+    raising DIVIDE_BY_ZERO under ANSI (all-zero or empty vectors; DuckDB
+    also returns NULL for x / 0.0, so the oracles agree)."""
+    return F.round(F.try_divide(dot, nn), dp)
+
+
 def cosine(a: Column, b: Column, dp: int = 6) -> Column:
-    return F.round(_dot(a, b) / (_norm(a) * _norm(b)), dp)
+    return _cos_from(_dot(a, b), _norm(a) * _norm(b), dp)
 
 
 def _cosine_pre(a: Column, b: Column, na: Column, nb: Column, dp: int = 6) -> Column:
@@ -44,7 +57,7 @@ def _cosine_pre(a: Column, b: Column, na: Column, nb: Column, dp: int = 6) -> Co
     identical _norm expression evaluated on the identical input, and
     the division multiplies them in the same order, so every IEEE
     intermediate — and the 6-dp round — is bit-identical."""
-    return F.round(_dot(a, b) / (na * nb), dp)
+    return _cos_from(_dot(a, b), na * nb, dp)
 
 
 def normalize_vectors(
@@ -245,6 +258,60 @@ def pair_cosine_histogram(
     )
 
 
+# Cell budget of one dot-product tile in cosine_pairs_blocked's kernel:
+# a block is scored as (rows x rows) tiles of at most this many pairs, so
+# the float64 accumulator and product buffer of one step stay ~8 MB each
+# however large a block grows.
+PAIR_TILE_CELLS = 1 << 20
+
+
+def _np_block_pairs(x, rank, lo: float, tile: int):
+    """Candidate pairs of one block of equal-length vectors `x` (n, dim)
+    float64, rows sorted by `rank` (dense id rank; equal ids share one).
+
+    Norms and dots are sequential left folds over the dimension index
+    (`acc += x_j * y_j` from 0.0), the same IEEE op sequence as _dot's
+    aggregate, and the norm product multiplies the same two doubles as
+    _cosine_pre, so every operand is bit-identical to the expression
+    form (the _np_sub_d2 rule). Returns (a, b, dot, nn) as row indices
+    and doubles for rank[a] < rank[b], nn != 0 and dot / nn >= lo or
+    NaN: a superset of the pairs whose 6-dp rounded score reaches
+    lo + 1e-6, left for Spark to verify. Rows are scored in tiles of
+    at most `tile` rows a side; with rows sorted by rank, only tiles
+    on or above the diagonal can hold an a < b pair."""
+    import numpy as np
+
+    n, dim = x.shape
+    out = ([], [], [], [])
+    with np.errstate(all="ignore"):  # NaN, Inf and zero norms are data here
+        sq = np.zeros(n, dtype=np.float64)
+        for j in range(dim):
+            sq += x[:, j] * x[:, j]
+        norm = np.sqrt(sq)
+        for s in range(0, n, tile):
+            xa, ra, na = x[s : s + tile], rank[s : s + tile], norm[s : s + tile]
+            for u in range(s, n, tile):
+                xb, rb, nb = x[u : u + tile], rank[u : u + tile], norm[u : u + tile]
+                acc = np.zeros((len(xa), len(xb)), dtype=np.float64)
+                prod = np.empty_like(acc)
+                for j in range(dim):  # sequential over dims: fold-order parity
+                    np.multiply(xa[:, j : j + 1], xb[None, :, j], out=prod)
+                    np.add(acc, prod, out=acc)
+                nn = na[:, None] * nb[None, :]
+                ratio = acc / nn
+                keep = (
+                    (ra[:, None] < rb[None, :])
+                    & (nn != 0)
+                    & ((ratio >= lo) | np.isnan(ratio))
+                )
+                ia, ib = np.nonzero(keep)
+                out[0].append(ia + s)
+                out[1].append(ib + u)
+                out[2].append(acc[ia, ib])
+                out[3].append(nn[ia, ib])
+    return tuple(np.concatenate(o) for o in out)
+
+
 def cosine_pairs_blocked(
     vectors: DataFrame,
     block_col: str,
@@ -252,26 +319,91 @@ def cosine_pairs_blocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """All-pairs cosine >= threshold within each block (near-dup detection).
-    The equi-join on the block key keeps the quadratic cost inside blocks."""
-    a = vectors.select(
-        F.col(block_col).alias("__blk"), F.col(id_col).alias("a_id"), F.col(vec_col).alias("__av"),
-        _norm(F.col(vec_col)).alias("__an"),
+    """All-pairs cosine >= threshold within each block (near-dup
+    detection): (a_id, b_id, cos) with a_id < b_id. The quadratic cost
+    stays inside blocks.
+
+    One `groupBy(block).applyInPandas` pass, no self-join:
+    - Spark first drops the rows that can never score: NULL block, NULL
+      id, NULL vector or a NULL element (which pandas would see as NaN).
+    - The kernel (_np_block_pairs) scores each block per vector length
+      (pairs of different lengths have a NULL dot) as a float64 matrix,
+      in tiles of at most PAIR_TILE_CELLS pairs. Its norms and dots fold
+      over the dimensions in _dot's order, so they are bit-identical to
+      the expression form; it emits (a_id, b_id, dot, norm product) for
+      the pairs whose unrounded ratio is within 1e-6 of `threshold` or
+      NaN. Pandas NaN crosses Arrow as NULL, so two flags carry the NaN
+      operands back.
+    - Spark rebuilds the NaNs and applies the same
+      `round(try_divide(dot, nn), 6) >= threshold` as _cosine_pre, so
+      rounding, NaN ordering (NaN passes every threshold) and
+      zero-norm NULLs are Spark's own. Ids compare by their dense rank
+      in the block, Spark's ordering for numbers and strings."""
+    from math import isqrt
+
+    from pyspark.sql.types import (
+        BooleanType, DoubleType, FloatType, StructField, StructType,
     )
-    b = vectors.select(
-        F.col(block_col).alias("__blk"), F.col(id_col).alias("b_id"), F.col(vec_col).alias("__bv"),
-        _norm(F.col(vec_col)).alias("__bn"),
+
+    lo = float(threshold) - 1e-6
+    tile = max(1, isqrt(PAIR_TILE_CELLS))
+    id_type = vectors.schema[id_col].dataType
+    v = F.col(vec_col)
+    if not isinstance(vectors.schema[vec_col].dataType.elementType, (FloatType, DoubleType)):
+        v = v.cast("array<double>")  # the cast _dot applies per element
+    src = vectors.select(
+        F.col(block_col).alias("__blk"), F.col(id_col).alias("__id"), v.alias("__v")
+    ).where(
+        F.col("__blk").isNotNull()
+        & F.col("__id").isNotNull()
+        & F.forall("__v", lambda e: e.isNotNull())  # NULL vector -> NULL -> dropped
     )
-    return (
-        a.join(b, "__blk")
-        .filter(F.col("a_id") < F.col("b_id"))
-        .select(
-            "a_id",
-            "b_id",
-            _cosine_pre(
-                F.col("__av"), F.col("__bv"), F.col("__an"), F.col("__bn")
-            ).alias("cos"),
+    schema = StructType(
+        [
+            StructField("a_id", id_type),
+            StructField("b_id", id_type),
+            StructField("__dot", DoubleType()),
+            StructField("__nn", DoubleType()),
+            StructField("__dot_nan", BooleanType()),
+            StructField("__nn_nan", BooleanType()),
+        ]
+    )
+
+    def _kernel(pdf):
+        import numpy as np
+        import pandas as pd
+
+        ids = pdf["__id"].to_numpy()
+        _, rank = np.unique(ids, return_inverse=True)
+        order = np.argsort(rank, kind="stable")
+        ids, rank = ids[order], rank[order]
+        vecs = pdf["__v"].to_numpy()[order]
+        lens = np.fromiter((len(e) for e in vecs), dtype=np.int64, count=len(vecs))
+        parts = []
+        for length in np.unique(lens):
+            rows = np.flatnonzero(lens == length)
+            x = np.stack([np.asarray(vecs[r], dtype=np.float64) for r in rows])
+            a, b, dot, nn = _np_block_pairs(x, rank[rows], lo, tile)
+            parts.append((rows[a], rows[b], dot, nn))
+        a, b, dot, nn = (np.concatenate(p) for p in zip(*parts))
+        return pd.DataFrame(
+            {
+                "a_id": ids[a],
+                "b_id": ids[b],
+                "__dot": dot,
+                "__nn": nn,
+                "__dot_nan": np.isnan(dot),
+                "__nn_nan": np.isnan(nn),
+            }
         )
+
+    nan = F.lit(float("nan"))
+    dot = F.when(F.col("__dot_nan"), nan).otherwise(F.col("__dot"))
+    nn = F.when(F.col("__nn_nan"), nan).otherwise(F.col("__nn"))
+    return (
+        src.groupBy("__blk")
+        .applyInPandas(_kernel, schema=schema)
+        .select("a_id", "b_id", _cos_from(dot, nn).alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
 
@@ -373,8 +505,8 @@ def lsh_topk(
     # SELECTIVE — a candidate scores only against queries sharing its
     # bucket (usually < 1 match per row), so a pre-join norm for every
     # corpus row costs MORE folds than the per-pair form; the hoist
-    # lives only in the expanding joins (cosine_pairs_blocked,
-    # cosine_topk, the cell-confined semantic scans)
+    # lives only in the expanding joins (cosine_topk, the cell-confined
+    # semantic scans; cosine_pairs_blocked folds norms in its kernel)
     scored = (
         c.join(F.broadcast(q), "bucket")
         .filter(F.col("query_id") != F.col("cand_id"))
@@ -672,9 +804,10 @@ def semantic_dedup(
 
     Scale shape: centroid assignment is a pure codegen projection
     (plan-time-constant centroids, same argmin as ivf_topk); the pair
-    join is an equi-join on the cluster id (quadratic confined to
-    clusters — the SemDeDup containment); the final drop is a plain
-    left_anti over the corpus (AQE broadcasts the drop set while small).
+    scan is cosine_pairs_blocked's per-cluster Arrow kernel (quadratic
+    confined to clusters — the SemDeDup containment); the final drop is
+    a plain left_anti over the corpus (AQE broadcasts the drop set while
+    small).
     Returns the input frame minus semantic near-duplicates, schema
     unchanged. With `centroids=None` a seeded KMeans trains the
     quantizer; pass explicit centroids for cross-engine-checkable runs."""
@@ -824,7 +957,7 @@ def semantic_lookup(
     Scale shape: the index NEVER re-assigns and never shuffles on its
     own grain — candidates come from an equi-join of the index rows
     against the (daily-batch-sized, broadcast) new rows on the cell id,
-    plus bucket expansion over the new rows alone. Per-day exchange
+    plus cosine_pairs_blocked over the new rows alone. Per-day exchange
     volume is O(append). Pair scope is cell-confined like
     `semantic_dedup` (a cross-cell near-dup is out of scope by the
     SemDeDup containment, documented there)."""

@@ -3391,7 +3391,6 @@ def test_decontaminate_semantic_hand_computed(spark):
     assert kept == [101, 102]
 
 
-@pytest.mark.slow  # full-gate tier (r15: default tier must fit the driver window)
 def test_contamination_report_semantic_tier(spark):
     """contamination_report with the optional semantic inputs: the grid
     gains a fourth method row per benchmark, a corpus doc whose
@@ -3436,7 +3435,6 @@ def test_contamination_report_semantic_tier(spark):
         )
 
 
-@pytest.mark.slow  # full-gate tier (r15: default tier must fit the driver window)
 def test_dedup_batch_semantic_incremental_contracts(spark):
     """The embedding-space incremental index (semantic_index /
     semantic_lookup / dedup_batch_semantic): under the append-only id
